@@ -65,7 +65,7 @@ class HBSIREngine:
             base_loader=base_loader,
             external_functions={**DEFAULT_EXTERNAL_FUNCTIONS, **(external_functions or {})},
             cache=FingerprintCache(cache_dir) if cache_dir else None,
-            weight_year_threshold=self.settings["weights.household_info_from_year"] - 1,
+            weight_year_threshold=self._weight_year_threshold(),
             raw_loader=raw_loader,
             cleaning_metadata=cleaning_metadata,
         )
@@ -103,8 +103,13 @@ class HBSIREngine:
             raw_loader=raw_loader,
             cache=FingerprintCache(cache_dir) if cache_dir else None,
             local_metadata_dir=local_metadata_dir,
+            weight_year_threshold=self._weight_year_threshold(),
         )
         return self
+
+    def _weight_year_threshold(self) -> int:
+        """Last year whose weights come from the external ``weights`` table."""
+        return self.settings["weights.household_info_from_year"] - 1
 
     # -- core loading ----------------------------------------------------
     def parse_years(self, years) -> list[int]:
@@ -158,16 +163,7 @@ class HBSIREngine:
         else:
             merged.update({k: dict(v) for k, v in schema.items()})
             target = next(iter(schema))
-        scratch = TableRegistry(
-            self.spark,
-            schema=merged,
-            metadata=self.registry.metadata,
-            base_loader=self.registry.base_loader,
-            external_functions=self.registry.compiler.external_functions,
-            cache=None,
-            raw_loader=self.registry.raw_loader,
-            cleaning_metadata=self.registry.cleaning_metadata,
-        )
+        scratch = self.registry.with_schema(merged)
         return scratch.load_table(target, self.parse_years(years))
 
     # -- decoders --------------------------------------------------------

@@ -298,6 +298,7 @@ def build_reference_registry(
     raw_loader=None,
     cache=None,
     local_metadata_dir: str | Path | None = None,
+    weight_year_threshold: int = 1395,
 ):
     """Wire the ported corpus into a :class:`TableRegistry`: real schema
     (with availability), real cleaning metadata, real household decoder
@@ -326,5 +327,5 @@ def build_reference_registry(
         external_functions=reference_external_functions(),
         cache=cache,
         cleaning_metadata=engine_cleaning_metadata(corpus.tables),
-        weight_year_threshold=1395,
+        weight_year_threshold=weight_year_threshold,
     )

@@ -7,10 +7,17 @@ a whole table build is ONE Catalyst plan: filters push into scans, projections
 fuse, joins get planned globally (SURVEY §4 — this is the headline
 architectural win over the reference's eager execution).
 
+There is one compile path, :meth:`PipelineCompiler.apply_batched`: it runs
+an instruction list once over a multi-year frame whose rows carry the hidden
+``PIPELINE_YEAR`` tag (an "era" of years sharing one resolved spec). A single
+year is an era of one — :meth:`PipelineCompiler.apply` tags, compiles and
+drops the tag. Every instruction has exactly one handler, written so that
+running it over the era equals running it year by year.
+
 Instruction set (reference parity + the two declarative replacements for
 embedded pandas eval — SURVEY §2.2 P20):
 
-* ``add_year`` / ``add_table_name`` — provenance literals (P6)
+* ``add_year`` / ``add_table_name`` — provenance columns (P6)
 * ``create_column`` — numerical expressions over coalesce(col, 0)-wrapped
   operands (P7; only operands named in the expression are filled, matching
   data_engine.py:362-367) and categorical when-chains with the reference's
@@ -25,6 +32,9 @@ embedded pandas eval — SURVEY §2.2 P20):
 * ``add_classification`` / ``add_attribute`` — J1/J2 decoders
 * ``apply_external_function`` — named transform registry (X1; arbitrary
   ``module.fn`` import is replaced by an explicit allowlist)
+* ``apply_filter_by_year`` / ``create_column_by_year`` — emitted by the
+  registry when years of one era differ only in a filter or numerical
+  expression: one year-conditional predicate / expression
 
 Steps whose year-resolved input is ``None`` are skipped (versioned
 disable, e.g. "1369: null" — metadata_utils semantics).
@@ -39,6 +49,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hbsir_old_spark.operators.reshape import melt as melt_op
+from hbsir_old_spark.operators.reshape import union_tables
 from hbsir_old_spark.plans.filters import translate_pandas_query
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -50,8 +61,7 @@ class _NeedsFlush(Exception):
 
 
 class _ColumnBatch:
-    """Pending column assignments with withColumn-identical semantics,
-    shared by the per-year and era-batched dispatchers.
+    """Pending column assignments with withColumn-identical semantics.
 
     * names resolve CASE-INSENSITIVELY, like Spark's analyzer: assigning
       ``Amount`` when ``amount`` exists replaces it in place (renaming to
@@ -102,16 +112,15 @@ class _ColumnBatch:
         return out
 
 
-#: hidden year tag carried by era-batched multi-year builds (attached to
-#: every base frame, copied into ``Year`` by ``add_year``, dropped at the
-#: top of ``load_table``)
+#: hidden year tag carried by every processed build (attached to every
+#: base frame, copied into ``Year`` by ``add_year``, dropped by
+#: ``load_table``)
 PIPELINE_YEAR = "__pipeline_year__"
 
 
-class BatchUnsafe(Exception):
-    """An instruction cannot be applied to an era-batched multi-year frame
-    with per-year-identical semantics (e.g. a join that does not key on
-    Year) — the registry falls back to per-year builds for the group."""
+def tag_year(df: DataFrame, year: int) -> DataFrame:
+    """``df`` with every row tagged as ``year``."""
+    return df.withColumn(PIPELINE_YEAR, F.lit(int(year)))
 
 _TYPE_MAP = {
     "unsigned": "long",
@@ -123,11 +132,14 @@ _TYPE_MAP = {
 }
 
 
+
+
 class PipelineCompiler:
     """Compiles instruction lists into DataFrame transformations.
 
-    ``registry`` (optional) provides ``load_table(name, years)`` and the
-    decoder/weights helpers for the instructions that need other tables.
+    ``registry`` (optional) provides the tagged table loads, availability
+    checks and the decoder/weights helpers for the instructions that need
+    other tables.
     """
 
     def __init__(
@@ -146,7 +158,34 @@ class PipelineCompiler:
         year: int,
         table_name: str,
     ) -> DataFrame:
-        """Apply an instruction list.
+        """Apply an instruction list to one year's untagged frame (an era
+        of one year)."""
+        out = self.apply_batched(tag_year(df, year), instructions, [year], table_name)
+        return out.drop(PIPELINE_YEAR)
+
+    def apply_batched(
+        self,
+        df: DataFrame,
+        instructions: Sequence,
+        years: Sequence[int],
+        table_name: str,
+    ) -> DataFrame:
+        """Apply one RESOLVED instruction list to a year-tagged frame.
+
+        ``df`` is the union of the base frames of ``years`` — a group whose
+        resolved spec is identical (the registry's era grouping) — each row
+        tagged with the hidden ``PIPELINE_YEAR`` int column. The
+        instructions run ONCE over the union instead of once per year —
+        driver-side analysis drops from O(years x instructions) to
+        O(eras x instructions) — with per-year semantics:
+
+        * row-wise steps (create_column / filters / decoders) are
+          year-oblivious;
+        * ``add_year`` copies the tag;
+        * aggregations/melts/projections carry the tag through; aggregate
+          and join additionally key on it, so neither mixes years;
+        * ``add_weights``/``add_classification`` receive the whole year
+          group (their joins/dims are year-keyed).
 
         Runs of column assignments (``add_year`` / ``add_table_name`` /
         ``create_column``) are BATCHED into one ``select`` instead of one
@@ -159,7 +198,10 @@ class PipelineCompiler:
         NUMERICAL column inlines its SQL (the flush select reads the
         pre-batch snapshot, so earlier assignments never see later
         overwrites); a reference to a pending CATEGORICAL column flushes
-        the batch first and recompiles against materialized columns."""
+        the batch first and recompiles against materialized columns.
+
+        The tag survives into the returned frame (``load_table`` drops
+        it)."""
         batch = _ColumnBatch()
 
         for step in instructions or []:
@@ -171,42 +213,48 @@ class PipelineCompiler:
                 method, arg = next(iter(step.items()))
             else:
                 raise ValueError(f"malformed instruction: {step!r}")
-            if method in ("add_year", "add_table_name", "create_column"):
+            if method in self._COLUMN_METHODS:
                 try:
-                    assign = self._column_assignment(
-                        method, arg, year, table_name, df, batch
-                    )
+                    assign = self._column_assignment(method, arg, table_name, df, batch)
                 except _NeedsFlush:
                     df = batch.flush(df)
-                    assign = self._column_assignment(
-                        method, arg, year, table_name, df, batch
-                    )
+                    assign = self._column_assignment(method, arg, table_name, df, batch)
                 if assign is not None:
                     batch.assign(*assign)
                 continue
+            df = batch.flush(df)
+            if method == "apply_pandas_function":
+                if arg is None:
+                    continue
+                method, arg = self._recognize_pandas(df, arg, table_name)
             handler = getattr(self, f"_op_{method}", None)
             if handler is None:
                 raise ValueError(f"unknown instruction {method!r}")
-            df = batch.flush(df)
-            result = handler(df, arg, year=year, table_name=table_name)
-            df = result if result is not None else df
+            df = handler(df, arg, years, table_name)
         return batch.flush(df)
 
+    _COLUMN_METHODS = frozenset(
+        {"add_year", "add_table_name", "create_column", "create_column_by_year"}
+    )
+
     def _column_assignment(
-        self, method: str, arg, year, table_name, df: DataFrame, batch: _ColumnBatch
+        self, method: str, arg, table_name, df: DataFrame, batch: _ColumnBatch
     ) -> "tuple[str, Column | str] | None":
         """One batched column assignment: (name, Column | SQL text), or
         None for a skipped (year-disabled) step. Raises :class:`_NeedsFlush`
-        when the expression references a pending column it cannot inline.
-        This is the ONLY compile path for add_year / add_table_name /
-        create_column — both dispatchers route through the batch."""
+        when the expression references a pending column it cannot inline."""
         if method == "add_year":
-            return "Year", F.lit(int(year))
+            # the tag IS the year (IntegerType, like a year literal)
+            return "Year", F.col(PIPELINE_YEAR)
         if method == "add_table_name":
             return "Table_Name", F.lit(table_name)
         if arg is None:
             return None
         name = arg["name"]
+        if method == "create_column_by_year":
+            return name, self._conditional_numerical_payload(
+                df, batch, name, arg["variants"]
+            )
         if arg["type"] == "numerical":
             return name, self._numerical_payload(df, batch, arg["expression"])
         if arg["type"] == "categorical":
@@ -222,12 +270,12 @@ class PipelineCompiler:
     def _numerical_payload(
         self, df: DataFrame, batch: _ColumnBatch, expression
     ) -> "Column | str":
-        """Batched twin of :meth:`_numerical_expression`: returns SQL text
-        (so later batch members can inline it) or a literal Column. A
-        reference to a pending column inlines that column's SQL wrapped in
-        the same operand coalesce the materialized column would get — the
-        flush ``select`` reads the pre-batch snapshot, so inlined SQL
-        evaluates exactly what the sequential withColumn would have."""
+        """A numerical expression as SQL text (so later batch members can
+        inline it) or a literal Column. A reference to a pending column
+        inlines that column's SQL wrapped in the same operand coalesce the
+        materialized column would get — the flush ``select`` reads the
+        pre-batch snapshot, so inlined SQL evaluates exactly what the
+        sequential withColumn would have."""
         if isinstance(expression, (int, float)) and not isinstance(expression, bool):
             return F.lit(expression)
         # fill ONLY the operands named in the expression (reference
@@ -249,6 +297,52 @@ class PipelineCompiler:
             return f"coalesce(`{actual}`, 0)"
 
         return _IDENT.sub(repl, expression)
+
+    def _numerical_sql_text(self, df, batch, expression) -> str:
+        """:meth:`_numerical_payload` forced to SQL text: literal numbers
+        become typed SQL literals (``30`` int / ``0.5D`` double — matching
+        F.lit's IntegerType/DoubleType)."""
+        if isinstance(expression, (int, float)) and not isinstance(expression, bool):
+            return (
+                f"{expression!r}D" if isinstance(expression, float) else str(expression)
+            )
+        payload = self._numerical_payload(df, batch, expression)
+        assert isinstance(payload, str)
+        return payload
+
+    def _conditional_numerical_payload(
+        self, df: DataFrame, batch, name: str, variants: Mapping
+    ) -> str:
+        """One year-conditional SQL expression merging per-year numerical
+        create_column variants (``{year: spec|None}``): each distinct
+        expression becomes a WHEN branch over its years; skipped years
+        fall to the ELSE, which keeps the existing column value (pending
+        SQL inlined, real column referenced raw, NULL when absent — the
+        same value those years see alone, where the skipped step leaves
+        the column untouched and the final union NULL-fills absentees)."""
+        groups: dict[str, tuple[Mapping, list[int]]] = {}
+        for y, v in variants.items():
+            if v is not None:
+                groups.setdefault(repr(v), (v, []))[1].append(y)
+        whens = [
+            (ys, self._numerical_sql_text(df, batch, v["expression"]))
+            for v, ys in groups.values()
+        ]
+        pend = batch.payload(name)
+        if pend is not None:
+            if not isinstance(pend, str):
+                raise _NeedsFlush()
+            else_sql = f"({pend})"
+        else:
+            columns = {c.lower(): c for c in df.columns}
+            actual = columns.get(name.lower())
+            else_sql = f"`{actual}`" if actual is not None else "NULL"
+        branches = " ".join(
+            f"WHEN `{PIPELINE_YEAR}` IN ({', '.join(str(int(y)) for y in ys)}) "
+            f"THEN ({sql})"
+            for ys, sql in whens
+        )
+        return f"CASE {branches} ELSE {else_sql} END"
 
     def _categorical_expression(
         self, df: DataFrame, column_name: str, categories: Mapping
@@ -282,7 +376,7 @@ class PipelineCompiler:
         raise ValueError(f"bad condition {condition!r}")
 
     # -- filters / projection -------------------------------------------
-    def _op_apply_filter(self, df, arg, year, table_name):
+    def _op_apply_filter(self, df, arg, years, table_name):
         if arg is None:
             return df
         conditions = [arg] if isinstance(arg, str) else list(arg)
@@ -290,7 +384,26 @@ class PipelineCompiler:
             df = df.filter(translate_pandas_query(condition))
         return df
 
-    def _op_apply_order(self, df, arg, year, table_name):
+    def _op_apply_filter_by_year(self, df, arg, years, table_name):
+        """One year-conditional predicate merging per-year filter variants
+        (``{year: conditions | None}``): a row survives iff its own year's
+        conditions hold (None = unfiltered). Keeps years whose specs
+        differ only in exclusion lists inside one compile group."""
+        groups: dict[str, tuple[Any, list[int]]] = {}
+        for y, a in arg.items():
+            groups.setdefault(repr(a), (a, []))[1].append(y)
+        pred: Column | None = None
+        for a, ys in groups.values():
+            branch = F.col(PIPELINE_YEAR).isin([int(y) for y in ys])
+            if a is not None:
+                # translate_pandas_query returns SQL text (df.filter
+                # accepts it directly; composing needs an expr Column)
+                for condition in ([a] if isinstance(a, str) else list(a)):
+                    branch = branch & F.expr(translate_pandas_query(condition))
+            pred = branch if pred is None else (pred | branch)
+        return df if pred is None else df.filter(pred)
+
+    def _op_apply_order(self, df, arg, years, table_name):
         if arg is None:
             return df
         exprs = []
@@ -303,13 +416,15 @@ class PipelineCompiler:
             if dtype:
                 col = col.cast(_TYPE_MAP.get(dtype, dtype))
             exprs.append(col.alias(name))
-        return df.select(*exprs)
+        return df.select(*exprs, F.col(PIPELINE_YEAR))
 
     # -- declarative reshape/agg (replaces pandas eval) ------------------
-    def _op_aggregate(self, df, arg, year, table_name):
+    def _op_aggregate(self, df, arg, years, table_name):
         if arg is None:
             return df
-        group = list(arg["groupby"])
+        # keying on the tag keeps aggregation within years (and keeps the
+        # tag out of the value columns)
+        group = [*arg["groupby"], PIPELINE_YEAR]
         how = arg.get("agg", "sum")
         value_cols = arg.get("columns") or [
             c for c in df.columns
@@ -319,12 +434,12 @@ class PipelineCompiler:
         aggs = [getattr(F, how)(c).alias(c) for c in value_cols]
         return df.groupBy(*group).agg(*aggs)
 
-    def _op_melt(self, df, arg, year, table_name):
+    def _op_melt(self, df, arg, years, table_name):
         if arg is None:
             return df
         return melt_op(
             df,
-            id_cols=arg["id_columns"],
+            id_cols=[*arg["id_columns"], PIPELINE_YEAR],
             value_cols=arg["value_columns"],
             var_name=arg.get("variable_name", "variable"),
             value_name=arg.get("value_name", "value"),
@@ -355,8 +470,7 @@ class PipelineCompiler:
 
     def _recognize_pandas(self, df: DataFrame, arg, table_name: str):
         """Translate the two supported pandas chains into a declarative
-        instruction: ("aggregate"|"melt", arg) — shared by the per-year and
-        era-batched dispatchers."""
+        instruction: ("aggregate"|"melt", arg)."""
         import ast
 
         text = str(arg).strip()
@@ -395,44 +509,46 @@ class PipelineCompiler:
             "set_axis melt (schema.yaml:704,873,919,1113,1131,1149,1172)"
         )
 
-    def _op_apply_pandas_function(self, df, arg, year, table_name):
-        if arg is None:
-            return df
-        kind, spec = self._recognize_pandas(df, arg, table_name)
-        handler = self._op_aggregate if kind == "aggregate" else self._op_melt
-        return handler(df, spec, year, table_name)
-
     # -- cross-table ------------------------------------------------------
-    def _op_join(self, df, arg, year, table_name):
+    def _require_registry(self, method: str):
+        if self.registry is None:
+            raise ValueError(f"{method} instruction requires a registry")
+        return self.registry
+
+    def _op_join(self, df, arg, years, table_name):
         if arg is None:
             return df
         if isinstance(arg, str):
             other_name, on = arg, ["Year", "ID"]
         else:
             other_name, on = arg["table_name"], list(arg["columns"])
-        if self.registry is None:
-            raise ValueError("join instruction requires a registry")
-        other = self.registry.load_table(other_name, [year])
-        return df.join(other, on=on, how="inner")
+        registry = self._require_registry("join")
+        registry.require_available(other_name, years)
+        # keying on the tag joins every year only with the same year of
+        # the other table, whatever the listed columns are
+        other = registry.load_tagged(other_name, years)
+        return df.join(other, on=[*on, PIPELINE_YEAR], how="inner")
 
-    def _op_add_weights(self, df, arg, year, table_name):
-        if self.registry is None:
-            raise ValueError("add_weights requires a registry")
+    def _op_add_weights(self, df, arg, years, table_name):
+        registry = self._require_registry("add_weights")
+        threshold = registry.weight_year_threshold
+        registry.require_available(
+            "household_information", [y for y in years if y > threshold]
+        )
+        registry.require_available("weights", [y for y in years if y <= threshold])
         adjust = bool(arg.get("adjust_for_household_size")) if isinstance(arg, Mapping) else False
-        return self.registry.add_weights(df, [year], adjust_for_household_size=adjust)
+        return registry.add_weights(df, list(years), adjust_for_household_size=adjust)
 
-    def _op_add_classification(self, df, arg, year, table_name):
-        if self.registry is None:
-            raise ValueError("add_classification requires a registry")
-        return self.registry.add_classification(df, years=[year], **(arg or {}))
+    def _op_add_classification(self, df, arg, years, table_name):
+        registry = self._require_registry("add_classification")
+        return registry.add_classification(df, years=list(years), **(arg or {}))
 
-    def _op_add_attribute(self, df, arg, year, table_name):
-        if self.registry is None:
-            raise ValueError("add_attribute requires a registry")
+    def _op_add_attribute(self, df, arg, years, table_name):
+        registry = self._require_registry("add_attribute")
         name = arg if isinstance(arg, str) else arg["name"]
-        return self.registry.add_attribute(df, name)
+        return registry.add_attribute(df, name)
 
-    def _op_apply_external_function(self, df, arg, year, table_name):
+    def _op_apply_external_function(self, df, arg, years, table_name):
         if arg is None:
             return df
         fn = self.external_functions.get(arg)
@@ -441,262 +557,19 @@ class PipelineCompiler:
                 f"external function {arg!r} is not registered "
                 f"(allowlist: {sorted(self.external_functions)})"
             )
-        return fn(df)
-
-    # -- era-batched application -----------------------------------------
-    def apply_batched(
-        self,
-        df: DataFrame,
-        instructions: Sequence,
-        years: Sequence[int],
-        table_name: str,
-    ) -> DataFrame:
-        """Apply one RESOLVED instruction list to a multi-year frame.
-
-        ``df`` is the union of per-year base frames for a group of years
-        whose resolved spec is identical (the registry's era grouping),
-        each row tagged with the hidden ``PIPELINE_YEAR`` int column. The
-        instructions run ONCE over the union instead of once per year —
-        driver-side analysis drops from O(years x instructions) to
-        O(eras x instructions) — with per-year-identical semantics:
-
-        * row-wise steps (create_column / filters / decoders) are
-          year-oblivious;
-        * ``add_year`` copies the tag instead of a literal;
-        * aggregations/melts/projections carry the tag through (aggregate
-          additionally keys on it, so partial aggregation stays within
-          years exactly like the per-year plans);
-        * joins must key on ``Year``; ``add_weights``/``add_classification``
-          receive the whole year group (their joins/dims are year-keyed).
-
-        Anything that cannot preserve per-year semantics raises
-        :class:`BatchUnsafe`, and the registry falls back to per-year
-        builds for the group. The tag survives into the returned frame
-        (callers drop it at the top of ``load_table``)."""
-        batch = _ColumnBatch()
-
-        for step in instructions or []:
-            if step is None:
-                continue
-            if isinstance(step, str):
-                method, arg = step, None
-            elif isinstance(step, Mapping) and len(step) == 1:
-                method, arg = next(iter(step.items()))
-            else:
-                raise ValueError(f"malformed instruction: {step!r}")
-            if method == "add_year":
-                # the tag IS the year literal of the per-year plan (both
-                # IntegerType); copying keeps one plan for the whole era
-                batch.assign("Year", F.col(PIPELINE_YEAR))
-                continue
-            if method in ("add_table_name", "create_column"):
-                try:
-                    assign = self._column_assignment(
-                        method, arg, 0, table_name, df, batch
-                    )
-                except _NeedsFlush:
-                    df = batch.flush(df)
-                    assign = self._column_assignment(
-                        method, arg, 0, table_name, df, batch
-                    )
-                if assign is not None:
-                    batch.assign(*assign)
-                continue
-            if method == "create_column_by_year":
-                try:
-                    payload = self._conditional_numerical_payload(
-                        df, batch, arg["name"], arg["variants"]
-                    )
-                except _NeedsFlush:
-                    df = batch.flush(df)
-                    payload = self._conditional_numerical_payload(
-                        df, batch, arg["name"], arg["variants"]
-                    )
-                batch.assign(arg["name"], payload)
-                continue
-            df = batch.flush(df)
-            if method == "apply_pandas_function":
-                if arg is None:
-                    continue
-                method, arg = self._recognize_pandas(df, arg, table_name)
-            handler = getattr(self, f"_bop_{method}", None)
-            if handler is not None:
-                result = handler(df, arg, years=years, table_name=table_name)
-            elif method in self._BATCH_SAFE_OPS:
-                result = getattr(self, f"_op_{method}")(
-                    df, arg, year=None, table_name=table_name
-                )
-            elif getattr(self, f"_op_{method}", None) is None:
-                raise ValueError(f"unknown instruction {method!r}")
-            else:
-                raise BatchUnsafe(
-                    f"instruction {method!r} has no era-batched form"
-                )
-            df = result if result is not None else df
-            if PIPELINE_YEAR not in df.columns:
-                raise BatchUnsafe(
-                    f"instruction {method!r} dropped the year tag"
-                )
-        return batch.flush(df)
-
-    #: per-year handlers that are year-oblivious and tag-preserving, safe
-    #: to reuse verbatim on a batched frame
-    _BATCH_SAFE_OPS = frozenset({"apply_filter", "add_attribute"})
-
-    def _bop_apply_order(self, df, arg, years, table_name):
-        if arg is None:
+        out = fn(df)
+        if out is None:
             return df
-        return self._op_apply_order(
-            df, [*arg, PIPELINE_YEAR], year=None, table_name=table_name
-        )
-
-    def _bop_aggregate(self, df, arg, years, table_name):
-        if arg is None:
-            return df
-        # keying on the tag keeps aggregation within years exactly like
-        # the per-year plans (and keeps the tag out of the value columns)
-        widened = dict(arg)
-        widened["groupby"] = [*arg["groupby"], PIPELINE_YEAR]
-        return self._op_aggregate(df, widened, year=None, table_name=table_name)
-
-    def _bop_melt(self, df, arg, years, table_name):
-        if arg is None:
-            return df
-        widened = dict(arg)
-        widened["id_columns"] = [*arg["id_columns"], PIPELINE_YEAR]
-        return self._op_melt(df, widened, year=None, table_name=table_name)
-
-    def _numerical_sql_text(self, df, batch, expression) -> str:
-        """:meth:`_numerical_payload` forced to SQL text: literal numbers
-        become typed SQL literals (``30`` int / ``0.5D`` double — matching
-        F.lit's IntegerType/DoubleType in the per-year plans)."""
-        if isinstance(expression, (int, float)) and not isinstance(expression, bool):
-            return (
-                f"{expression!r}D" if isinstance(expression, float) else str(expression)
-            )
-        payload = self._numerical_payload(df, batch, expression)
-        assert isinstance(payload, str)
-        return payload
-
-    def _conditional_numerical_payload(
-        self, df: DataFrame, batch, name: str, variants: Mapping
-    ) -> str:
-        """One year-conditional SQL expression merging per-year numerical
-        create_column variants (``{year: spec|None}``): each distinct
-        expression becomes a WHEN branch over its years; skipped years
-        fall to the ELSE, which keeps the existing column value (pending
-        SQL inlined, real column referenced raw, NULL when absent — the
-        same value those years see per-year, where the skipped step leaves
-        the column untouched and the final union NULL-fills absentees)."""
-        groups: dict[str, tuple[Mapping, list[int]]] = {}
-        for y, v in variants.items():
-            if v is not None:
-                groups.setdefault(repr(v), (v, []))[1].append(y)
-        whens = [
-            (ys, self._numerical_sql_text(df, batch, v["expression"]))
-            for v, ys in groups.values()
-        ]
-        pend = batch.payload(name)
-        if pend is not None:
-            if not isinstance(pend, str):
-                raise _NeedsFlush()
-            else_sql = f"({pend})"
-        else:
-            columns = {c.lower(): c for c in df.columns}
-            actual = columns.get(name.lower())
-            else_sql = f"`{actual}`" if actual is not None else "NULL"
-        branches = " ".join(
-            f"WHEN `{PIPELINE_YEAR}` IN ({', '.join(str(int(y)) for y in ys)}) "
-            f"THEN ({sql})"
-            for ys, sql in whens
-        )
-        return f"CASE {branches} ELSE {else_sql} END"
-
-    def _bop_apply_filter_by_year(self, df, arg, years, table_name):
-        """One year-conditional predicate merging per-year filter variants
-        (``{year: conditions | None}``): a row survives iff its own year's
-        conditions hold (None = unfiltered). Keeps years whose specs
-        differ only in exclusion lists inside one compile group."""
-        groups: dict[str, tuple[Any, list[int]]] = {}
-        for y, a in arg.items():
-            groups.setdefault(repr(a), (a, []))[1].append(y)
-        pred: Column | None = None
-        for a, ys in groups.values():
-            branch = F.col(PIPELINE_YEAR).isin([int(y) for y in ys])
-            if a is not None:
-                # translate_pandas_query returns SQL text (df.filter
-                # accepts it directly; composing needs an expr Column)
-                for condition in ([a] if isinstance(a, str) else list(a)):
-                    branch = branch & F.expr(translate_pandas_query(condition))
-            pred = branch if pred is None else (pred | branch)
-        return df if pred is None else df.filter(pred)
-
-    def _require_full_availability(self, table: str, years) -> None:
-        """Per-year builds RAISE when a joined table is unavailable for a
-        requested year; a batched inner/left join over a partial union
-        would instead silently drop or NULL those years' rows. Fall back
-        to per-year whenever the schema's declared availability does not
-        cover the whole group. (A loader that returns None for a subset
-        of years is still diagnosed per-year only — data-dependent gaps
-        are not visible at plan time.)"""
-        missing = [
-            y for y in years if y not in set(
-                self.registry.available_years(table, list(years))
-            )
-        ]
-        if missing:
-            raise BatchUnsafe(
-                f"table {table!r} is unavailable for years {missing} — "
-                "per-year semantics raise there"
-            )
-
-    def _bop_join(self, df, arg, years, table_name):
-        if arg is None:
-            return df
-        if isinstance(arg, str):
-            other_name, on = arg, ["Year", "ID"]
-        else:
-            other_name, on = arg["table_name"], list(arg["columns"])
-        if "Year" not in on:
-            raise BatchUnsafe(
-                f"join with {other_name!r} does not key on Year"
-            )
-        if self.registry is None:
-            raise ValueError("join instruction requires a registry")
-        self._require_full_availability(other_name, years)
-        other = self.registry.load_table(other_name, list(years))
-        return df.join(other, on=on, how="inner")
-
-    def _bop_add_weights(self, df, arg, years, table_name):
-        if self.registry is None:
-            raise ValueError("add_weights requires a registry")
-        threshold = self.registry.weight_year_threshold
-        for source, ys in (
-            ("household_information", [y for y in years if y > threshold]),
-            ("weights", [y for y in years if y <= threshold]),
-        ):
-            if ys:
-                self._require_full_availability(source, ys)
-        adjust = bool(arg.get("adjust_for_household_size")) if isinstance(arg, Mapping) else False
-        return self.registry.add_weights(
-            df, list(years), adjust_for_household_size=adjust
-        )
-
-    def _bop_add_classification(self, df, arg, years, table_name):
-        if self.registry is None:
-            raise ValueError("add_classification requires a registry")
-        return self.registry.add_classification(df, years=list(years), **(arg or {}))
-
-    def _bop_apply_external_function(self, df, arg, years, table_name):
-        out = self._op_apply_external_function(
-            df, arg, year=None, table_name=table_name
-        )
-        if out is None or PIPELINE_YEAR in out.columns:
+        if PIPELINE_YEAR in out.columns:
             return out
         if "Year" in out.columns:
             # aggregating externals (number_of_members) key on Year —
-            # re-derive the tag so the batched invariant holds
-            return out.withColumn(
-                PIPELINE_YEAR, F.col("Year").cast("int")
-            )
-        raise BatchUnsafe(f"external function {arg!r} dropped Year")
+            # re-derive the tag from it
+            return out.withColumn(PIPELINE_YEAR, F.col("Year").cast("int"))
+        # neither tag nor Year survived, so the function cannot keep years
+        # apart: run it on each year's slice and re-tag the results
+        slices = {
+            y: df.filter(F.col(PIPELINE_YEAR) == int(y)).drop(PIPELINE_YEAR)
+            for y in years
+        }
+        return union_tables([tag_year(fn(part), y) for y, part in slices.items()])

@@ -6,14 +6,22 @@ Reference parity: TableFactory/TableHandler
 construction of standard tables from original tables via instruction
 pipelines, multi-year union, availability pruning
 (parsing_utils.py:104-143), cache_result fingerprinting (data_engine.py:
-515-610). Differences by design: construction emits ONE lazy plan per year
-(no eager steps, no thread pool — Spark's scheduler parallelizes scans),
-and multi-year results are a ``unionByName`` of per-year plans, so Catalyst
-sees the whole multi-year query at once.
+515-610).
+
+Differences by design: there is ONE processed-build path, the era-batched
+build. Requested years are grouped into eras (years whose resolved spec is
+the same up to row-wise drift); each era's member/base frames are unioned
+with a hidden ``PIPELINE_YEAR`` tag and its instructions compile once
+(:meth:`PipelineCompiler.apply_batched`). A single year is an era of one.
+Nothing runs eagerly (no thread pool — Spark's scheduler parallelizes
+scans), and the multi-year result is one lazy plan, so Catalyst sees the
+whole multi-year query at once. ``cache_result`` tables are fingerprinted,
+read and written per year inside that build.
 """
 
 from __future__ import annotations
 
+import copy
 from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,11 +35,7 @@ from hbsir_old_spark.operators.classification import (
     build_classification_dim,
 )
 from hbsir_old_spark.operators.reshape import union_tables
-from hbsir_old_spark.plans.pipeline import (
-    PIPELINE_YEAR,
-    BatchUnsafe,
-    PipelineCompiler,
-)
+from hbsir_old_spark.plans.pipeline import PIPELINE_YEAR, PipelineCompiler, tag_year
 from hbsir_old_spark.sources.cache import FingerprintCache, stable_fingerprint
 from hbsir_old_spark.sources.partitions import infer_years
 
@@ -172,14 +176,8 @@ class TableRegistry:
         weight_year_threshold: int = 1395,
         raw_loader: BaseLoader | None = None,
         cleaning_metadata: Mapping[str, Mapping] | None = None,
-        batch_years: bool = True,
     ):
         self.spark = spark
-        #: era-batched multi-year builds (compile each distinct resolved
-        #: spec once over a Year-tagged union instead of once per year);
-        #: False forces the per-year reference-shaped build everywhere
-        self.batch_years = batch_years
-        self.schema = dict(schema or {})
         self.metadata = dict(metadata or {})
         self.base_loader = base_loader
         self.raw_loader = raw_loader
@@ -187,10 +185,26 @@ class TableRegistry:
         self.cache = cache
         self.weight_year_threshold = weight_year_threshold
         self.compiler = PipelineCompiler(registry=self, external_functions=external_functions)
-        self._availability: dict[str, CodeRangeSet] = {}
-        for name, spec in self.schema.items():
-            if isinstance(spec, Mapping) and "years" in spec:
-                self._availability[name] = CodeRangeSet(spec["years"])
+        self._set_schema(schema or {})
+
+    def _set_schema(self, schema: Mapping[str, Any]) -> None:
+        self.schema = dict(schema)
+        self._availability: dict[str, CodeRangeSet] = {
+            name: CodeRangeSet(spec["years"])
+            for name, spec in self.schema.items()
+            if isinstance(spec, Mapping) and "years" in spec
+        }
+
+    def with_schema(self, schema: Mapping[str, Any]) -> "TableRegistry":
+        """A copy of this registry that differs only in its schema: loaders,
+        metadata, cache, external functions and every other setting carry
+        over."""
+        clone = copy.copy(self)
+        clone.compiler = PipelineCompiler(
+            registry=clone, external_functions=self.compiler.external_functions
+        )
+        clone._set_schema(schema)
+        return clone
 
     # -- availability ----------------------------------------------------
     def is_available(self, name: str, year: int) -> bool:
@@ -199,6 +213,15 @@ class TableRegistry:
 
     def available_years(self, name: str, years: Sequence[int]) -> list[int]:
         return [y for y in years if self.is_available(name, y)]
+
+    def require_available(self, name: str, years: Sequence[int]) -> None:
+        """Raise the unavailable-table error for the years of ``years`` the
+        schema does not declare ``name`` available in. Joins need this: a
+        join over a partly available table would silently drop or NULL
+        the uncovered years' rows instead of failing."""
+        missing = [y for y in years if not self.is_available(name, y)]
+        if missing:
+            raise self._unavailable_error(name, missing, "processed")
 
     # -- build -----------------------------------------------------------
     def load_table(
@@ -219,35 +242,34 @@ class TableRegistry:
             raise ValueError(
                 f"form must be 'processed', 'cleaned' or 'raw', got {form!r}"
             )
-        if form == "processed" and self.batch_years:
-            parts = self._build_years_batched(name, list(years))
-            if parts:
-                return union_tables(parts).drop(PIPELINE_YEAR)
-            # empty build: raise the shared unavailable-table error WITHOUT
-            # re-running the per-year build first — loaders were already
-            # probed once and need not be idempotent
-            raise self._unavailable_error(name, list(years), form)
+        if form == "processed":
+            return self.load_tagged(name, years).drop(PIPELINE_YEAR)
         parts = []
         for year in self.available_years(name, years):
-            if form == "processed":
-                df = self._build_year(name, year)
-            else:
-                spec = self._schema_spec(name, year)
-                if spec is not None and "table_list" in spec:
-                    raise ValueError(
-                        f"{name!r} is a standard (derived) table; standard "
-                        "tables are only available in form='processed' "
-                        "(reference api.py:168-171,178-181)"
-                    )
-                df = (
-                    self._load_raw(name, year)
-                    if form == "raw"
-                    else self._load_cleaned(name, year)
+            spec = self._schema_spec(name, year)
+            if spec is not None and "table_list" in spec:
+                raise ValueError(
+                    f"{name!r} is a standard (derived) table; standard "
+                    "tables are only available in form='processed' "
+                    "(reference api.py:168-171,178-181)"
                 )
+            df = (
+                self._load_raw(name, year)
+                if form == "raw"
+                else self._load_cleaned(name, year)
+            )
             if df is not None:
                 parts.append(df)
         if not parts:
             raise self._unavailable_error(name, list(years), form)
+        return union_tables(parts)
+
+    def load_tagged(self, name: str, years: Sequence[int]) -> DataFrame:
+        """The processed form of ``name`` with the hidden ``PIPELINE_YEAR``
+        tag still attached (what the ``join`` instruction keys on)."""
+        parts = self._build_years_batched(name, list(years))
+        if not parts:
+            raise self._unavailable_error(name, list(years), "processed")
         return union_tables(parts)
 
     def _unavailable_error(
@@ -281,31 +303,41 @@ class TableRegistry:
             df = self.base_loader(name, year)
             if df is not None:
                 return df
-        if self.raw_loader is not None:
-            # with a base loader also configured, the base layer is the
-            # registry's cleaned source of record, so a raw table with no
-            # cleaning metadata is simply unavailable for this year (not an
-            # error — raising here would turn every processed build touching
-            # the table into a hard failure); skip the raw probe entirely.
-            meta = self.cleaning_metadata.get(name)
-            if meta is None and self.base_loader is not None:
-                return None
-            # raw-only registry: probe raw FIRST — a table the raw source
-            # simply doesn't carry must prune gracefully (return None), and
-            # only a table that HAS raw data but no metadata to clean it is
-            # a configuration error.
-            raw = self.raw_loader(name, year)
-            if raw is None:
-                return None
-            if meta is None:
-                raise KeyError(
-                    f"raw table {name!r} has no cleaning metadata; cannot "
-                    "derive its cleaned form"
-                )
-            from hbsir_old_spark.sources.cleaner import clean_table
+        found = self._raw_to_clean(name, year)
+        if found is None:
+            return None
+        from hbsir_old_spark.sources.cleaner import clean_table
 
-            return clean_table(raw, meta, year)
-        return None
+        return clean_table(*found, year)
+
+    def _raw_to_clean(
+        self, name: str, year: int
+    ) -> "tuple[DataFrame, Mapping] | None":
+        """(raw frame, cleaning metadata) for deriving the cleaned form of
+        ``name`` in ``year``, or None when there is nothing to clean."""
+        if self.raw_loader is None:
+            return None
+        # with a base loader also configured, the base layer is the
+        # registry's cleaned source of record, so a raw table with no
+        # cleaning metadata is simply unavailable for this year (not an
+        # error — raising here would turn every processed build touching
+        # the table into a hard failure); skip the raw probe entirely.
+        meta = self.cleaning_metadata.get(name)
+        if meta is None and self.base_loader is not None:
+            return None
+        # raw-only registry: probe raw FIRST — a table the raw source
+        # simply doesn't carry must prune gracefully (return None), and
+        # only a table that HAS raw data but no metadata to clean it is
+        # a configuration error.
+        raw = self.raw_loader(name, year)
+        if raw is None:
+            return None
+        if meta is None:
+            raise KeyError(
+                f"raw table {name!r} has no cleaning metadata; cannot "
+                "derive its cleaned form"
+            )
+        return raw, meta
 
     def _missing_dependencies(self, name: str, years: Sequence[int]) -> set[str]:
         """Diagnostic walk (error-path only): leaf dependencies of ``name``
@@ -359,49 +391,7 @@ class TableRegistry:
         resolved = resolve_versioned(raw, year)
         return resolved if isinstance(resolved, Mapping) else None
 
-    def _build_year(self, name: str, year: int) -> DataFrame | None:
-        # availability applies to recursive member builds too (a derived
-        # table's union simply drops unavailable members for that year)
-        if not self.is_available(name, year):
-            return None
-        spec = self._schema_spec(name, year)
-        if spec is None:
-            return self._load_base(name, year)
-
-        if spec.get("cache_result") and self.cache is not None:
-            fingerprint = self.dependency_fingerprint(name, year)
-            cached = self.cache.get(self.spark, name, year, fingerprint)
-            if cached is not None:
-                return cached
-
-        if "table_list" in spec:
-            members = spec["table_list"]
-            if members is None:
-                # versioned member list resolving to null: the derived
-                # table does not exist this year (e.g. Cash_Incomes before
-                # 1369) — prune like any other unavailable table
-                return None
-            members = [members] if isinstance(members, str) else list(members)
-            parts = [self._build_year(member, year) for member in members]
-            parts = [p for p in parts if p is not None]
-            if not parts:
-                return None
-            df = union_tables(parts)
-        else:
-            df = self._load_base(name, year)
-            if df is None:
-                return None
-
-        df = self.compiler.apply(df, spec.get("instructions") or [], year, name)
-
-        if spec.get("cache_result") and self.cache is not None:
-            df = self.cache.put(df, name, year, fingerprint)
-        return df
-
     # -- era-batched build ----------------------------------------------
-    def _tag(self, df: DataFrame, year: int) -> DataFrame:
-        return df.withColumn(PIPELINE_YEAR, F.lit(int(year)))
-
     def _build_years_batched(
         self, name: str, years: Sequence[int]
     ) -> list[DataFrame]:
@@ -413,13 +403,13 @@ class TableRegistry:
         by fingerprint). Per era, member/base frames are unioned with a
         hidden ``PIPELINE_YEAR`` tag and the era's instructions compile
         ONCE via :meth:`PipelineCompiler.apply_batched`. For the 39-year
-        reference workload this turns ~10 s/era-count of driver analysis
-        into the era count (~10 for food), while the executed plan is the
-        same scan -> map -> aggregate shape with identical row semantics
-        (proven per-gate by the DuckDB oracles and the batched-vs-per-year
-        equality test). Falls back to per-year builds for a group when an
-        instruction has no batch-safe form (:class:`BatchUnsafe`) or when
-        ``cache_result`` is set (the fingerprint cache is year-keyed)."""
+        reference workload this turns one compile per year into one per
+        era (~10 for food), while the executed plan is the same scan ->
+        map -> aggregate shape with identical row semantics (proven
+        per-gate by the DuckDB oracles and the era-vs-year-by-year
+        equality tests). ``cache_result`` tables are handled year by year
+        (the fingerprint cache is year-keyed), see :meth:`_cached_year`.
+        Returns tagged frames, one or more per era."""
         groups: dict[str, list[int]] = {}
         spec_by_fp: dict[str, Mapping | None] = {}
         variants_by_fp: dict[str, dict[int, Any]] = {}
@@ -436,14 +426,6 @@ class TableRegistry:
             spec_by_fp[fp] = spec
             variants_by_fp.setdefault(fp, {})[year] = year_variants
 
-        out: list[DataFrame] = []
-
-        def per_year_fallback(ys: Sequence[int]) -> None:
-            for y in ys:
-                df = self._build_year(name, y)
-                if df is not None:
-                    out.append(self._tag(df, y))
-
         # one batched-loader call for the whole span (not one per spec
         # group): each call materializes every layout-era frame, so
         # per-group calls built eras x groups frames and threw most away
@@ -456,62 +438,94 @@ class TableRegistry:
             all_years = sorted(y for ys in groups.values() for y in ys)
             prefetched = load_years(name, all_years) or []
 
-        def build_group(spec: Mapping, ys: Sequence[int], instructions) -> None:
-            if spec.get("cache_result") and self.cache is not None:
-                per_year_fallback(ys)
-                return
-            if "table_list" in spec:
-                members = spec["table_list"]
-                if members is None:
-                    return  # null member list: absent this era (see above)
-                members = [members] if isinstance(members, str) else list(members)
-                parts: list[DataFrame] = []
-                for member in members:
-                    parts.extend(self._build_years_batched(member, ys))
-                if not parts:
-                    return
-                df = union_tables(parts)
-            else:
-                base = self._base_frames_batched(name, ys, prefetched)
-                if not base:
-                    return
-                df = union_tables(base)
-            try:
-                out.append(
-                    self.compiler.apply_batched(df, instructions, ys, name)
-                )
-            except BatchUnsafe:
-                per_year_fallback(ys)
-
+        out: list[DataFrame] = []
         for fp, ys in groups.items():
             spec = spec_by_fp[fp]
             if spec is None:
                 out.extend(self._base_frames_batched(name, ys, prefetched))
                 continue
+            if spec.get("cache_result") and self.cache is not None:
+                cached = (self._cached_year(name, y, prefetched) for y in ys)
+                out.extend(df for df in cached if df is not None)
+                continue
             instructions = _merge_variants(
                 spec.get("instructions") or [], variants_by_fp[fp]
             )
             if instructions is not None:
-                build_group(spec, ys, instructions)
-                continue
-            # a create_column position with unmergeable variants (renamed
-            # targets or categorical specs): re-split by FULL spec
-            # fingerprint — within a subgroup every variant agrees, so the
-            # merge is trivially exact
-            subgroups: dict[str, tuple[Mapping, list[int]]] = {}
-            for y in ys:
-                full = self._schema_spec(name, y)
-                sub_fp = stable_fingerprint(full)
-                subgroups.setdefault(sub_fp, (full, []))[1].append(y)
-            for full, sub_ys in subgroups.values():
-                build_group(full, sub_ys, full.get("instructions") or [])
+                compile_groups = [(spec, ys, instructions)]
+            else:
+                # a create_column position with unmergeable variants
+                # (renamed targets or categorical specs): re-split by FULL
+                # spec fingerprint — within a subgroup every variant
+                # agrees, so the merge is trivially exact
+                subgroups: dict[str, tuple[Mapping, list[int]]] = {}
+                for y in ys:
+                    full = self._schema_spec(name, y)
+                    sub_fp = stable_fingerprint(full)
+                    subgroups.setdefault(sub_fp, (full, []))[1].append(y)
+                compile_groups = [
+                    (full, sub_ys, full.get("instructions") or [])
+                    for full, sub_ys in subgroups.values()
+                ]
+            for group_spec, group_years, group_instructions in compile_groups:
+                df = self._compile_group(
+                    name, group_spec, group_years, group_instructions, prefetched
+                )
+                if df is not None:
+                    out.append(df)
         return out
+
+    def _compile_group(
+        self,
+        name: str,
+        spec: Mapping,
+        years: Sequence[int],
+        instructions,
+        prefetched,
+    ) -> DataFrame | None:
+        """One era: union its tagged member (derived table) or base frames
+        and compile its instructions once over the union."""
+        if "table_list" in spec:
+            members = spec["table_list"]
+            if members is None:
+                # versioned member list resolving to null: the derived
+                # table does not exist this era (e.g. Cash_Incomes before
+                # 1369) — prune like any other unavailable table
+                return None
+            members = [members] if isinstance(members, str) else list(members)
+            parts = [
+                df for member in members
+                for df in self._build_years_batched(member, years)
+            ]
+        else:
+            parts = self._base_frames_batched(name, years, prefetched)
+        if not parts:
+            return None
+        return self.compiler.apply_batched(
+            union_tables(parts), instructions, years, name
+        )
+
+    def _cached_year(self, name: str, year: int, prefetched) -> DataFrame | None:
+        """One tagged year of a ``cache_result`` table: read from the
+        fingerprint cache, or built as a one-year era from that year's own
+        spec and written there (cache files hold the untagged frame)."""
+        fingerprint = self.dependency_fingerprint(name, year)
+        df = self.cache.get(self.spark, name, year, fingerprint)
+        if df is None:
+            spec = self._schema_spec(name, year)
+            built = self._compile_group(
+                name, spec, [year], spec.get("instructions") or [], prefetched
+            )
+            if built is None:
+                return None
+            df = self.cache.put(built.drop(PIPELINE_YEAR), name, year, fingerprint)
+        return tag_year(df, year)
 
     def _base_frames_batched(
         self,
         name: str,
         years: Sequence[int],
-        prefetched: "list[tuple[Sequence[int], DataFrame]] | None" = None,
+        prefetched: "list[tuple[Sequence[int], DataFrame]] | None",
     ) -> list[DataFrame]:
         """Tagged cleaned-layer frames for a group of years. Base-loader
         (materialized parquet) years stay one frame per year; raw-derived
@@ -528,7 +542,7 @@ class TableRegistry:
             if self.base_loader is not None:
                 df = self.base_loader(name, year)
                 if df is not None:
-                    out.append(self._tag(df, year))
+                    out.append(tag_year(df, year))
                     continue
             remaining.append(year)
         years = remaining
@@ -539,11 +553,9 @@ class TableRegistry:
         # column) instead of one frame per year — at 39 years the per-year
         # py4j/analysis round-trips are the dominant driver cost, and at
         # cluster scale one pruned scan per era is the right plan anyway.
+        # ``prefetched`` is that call's result for the whole requested span
+        # (made once in _build_years_batched), None without such a loader.
         if years and meta is not None:
-            if prefetched is None:
-                load_years = getattr(self.raw_loader, "load_years", None)
-                if load_years is not None:
-                    prefetched = load_years(name, list(years)) or []
             for full_covered, frame in prefetched or []:
                 covered = [y for y in full_covered if y in years]
                 if not covered:
@@ -573,20 +585,10 @@ class TableRegistry:
             if not years:
                 return out
         for year in years:
-            if self.raw_loader is None:
+            found = self._raw_to_clean(name, year)
+            if found is None:
                 continue
-            # mirrors _load_cleaned: with a base loader configured, the
-            # base layer is the source of record — no metadata, no raw probe
-            if meta is None and self.base_loader is not None:
-                continue
-            raw = self.raw_loader(name, year)
-            if raw is None:
-                continue
-            if meta is None:
-                raise KeyError(
-                    f"raw table {name!r} has no cleaning metadata; cannot "
-                    "derive its cleaned form"
-                )
+            raw, _ = found
             resolved = resolve_versioned(meta, year) or {}
             # the RAW SCHEMA is part of the era key: the metadata names
             # every historical layout's columns (COL* and DYCOL* both map
@@ -595,7 +597,7 @@ class TableRegistry:
             # the one-select clean
             fp = stable_fingerprint([resolved, list(raw.columns)])
             raw_groups.setdefault(fp, (resolved, []))[1].append(
-                self._tag(raw, year)
+                tag_year(raw, year)
             )
         for resolved, frames in raw_groups.values():
             out.append(
@@ -604,16 +606,6 @@ class TableRegistry:
                 )
             )
         return out
-
-    def _load_base(self, name: str, year: int) -> DataFrame | None:
-        """Base layer of a processed build = the cleaned form, so derived
-        pipelines transparently run over raw sources when no materialized
-        base parquet exists."""
-        if self.base_loader is None and self.raw_loader is None:
-            raise KeyError(
-                f"no schema entry, base loader, or raw loader for table {name!r}"
-            )
-        return self._load_cleaned(name, year)
 
     # -- fingerprints ----------------------------------------------------
     def dependency_fingerprint(self, name: str, year: int) -> str:
@@ -626,12 +618,15 @@ class TableRegistry:
 
         def walk(table: str) -> Any:
             spec = self._schema_spec(table, year)
+            node: dict[str, Any] = (
+                {"base": table} if spec is None else {"spec": spec}
+            )
+            # every table without members reads a base file — also an
+            # original table whose schema entry only adds pipeline steps
+            if stats_fn is not None and (spec is None or "table_list" not in spec):
+                node["stat"] = stats_fn(table, year)
             if spec is None:
-                leaf: dict[str, Any] = {"base": table}
-                if stats_fn is not None:
-                    leaf["stat"] = stats_fn(table, year)
-                return leaf
-            node: dict[str, Any] = {"spec": spec}
+                return node
             members = spec.get("table_list")
             if members:
                 members = [members] if isinstance(members, str) else list(members)

@@ -64,6 +64,16 @@ def ensure_min_partitions(df, minimum: int | None = None):
     return df
 
 
+def _default_driver_mem() -> str:
+    """``min(16g, physical RAM / 4)`` as a JVM size string."""
+    cap_mb = 16 * 1024
+    try:
+        ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    except (AttributeError, ValueError, OSError):
+        return f"{cap_mb}m"
+    return f"{min(cap_mb, ram_mb // 4)}m"
+
+
 def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
@@ -108,10 +118,11 @@ def get_spark(app_name: str = "hbsir_old_spark", shuffle_partitions: int | None 
     # the pinned footprint modest and makes old-gen collections frequent
     # enough that ContextCleaner's weak-ref reaping of dropped
     # localCheckpoint blocks actually runs; GC itself is parallel USER
-    # time, orders cheaper than the kernel storms. Production overrides:
-    # HBSIR_SPARK_DRIVER_MEM sizes the heap, HBSIR_SPARK_DRIVER_JAVAOPTS
-    # replaces the flag set entirely.
-    driver_mem = os.environ.get("HBSIR_SPARK_DRIVER_MEM", "16g")
+    # time, orders cheaper than the kernel storms. The default is capped at
+    # a quarter of physical memory: a pinned 16g heap cannot even be mapped
+    # on a 15 GiB host. Production overrides: HBSIR_SPARK_DRIVER_MEM sizes
+    # the heap, HBSIR_SPARK_DRIVER_JAVAOPTS replaces the flag set entirely.
+    driver_mem = os.environ.get("HBSIR_SPARK_DRIVER_MEM") or _default_driver_mem()
     driver_javaopts = os.environ.get(
         "HBSIR_SPARK_DRIVER_JAVAOPTS", f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
     )

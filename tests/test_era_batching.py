@@ -1,11 +1,12 @@
 """Era-batched multi-year builds (plans/registry.py:_build_years_batched).
 
-The batched path must be OBSERVATIONALLY IDENTICAL to the per-year
-reference-shaped build: same rows, same schema, for every table the
-corpus can express. The strongest pin is full-span equality over the real
-39-year metadata (every layout era, the filter-drift merge, the
-classification decode, the projection change); synthetic specs pin the
-BatchUnsafe fallback and the tag-preservation invariants.
+A multi-year build must be OBSERVATIONALLY IDENTICAL to the union of
+one-year builds of the same table: same rows, same schema, for every table
+the corpus can express. The strongest pin is full-span equality over the
+real 39-year metadata (every layout era, the filter-drift merge, the
+classification decode, the projection change); synthetic specs pin joins
+not keyed on Year, partial availability and the tag-preservation
+invariants.
 """
 
 from __future__ import annotations
@@ -14,6 +15,13 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+
+
+def _year_by_year(reg, name, years):
+    """The reference build: one single-year load per year, unioned."""
+    from hbsir_old_spark.operators.reshape import union_tables
+
+    return union_tables([reg.load_table(name, [y]) for y in years])
 
 
 def _collect_sorted(df):
@@ -25,14 +33,13 @@ def _collect_sorted(df):
 
 class TestFullSpanEquality:
     def test_batched_equals_per_year_full_span(self, spark, sf_dir):
-        """39 years through the genuine corpus: batched vs per-year builds
-        produce identical row multisets and schemas."""
+        """39 years through the genuine corpus: the multi-year era build
+        and year-by-year builds produce identical row multisets and
+        schemas."""
         years = list(range(1363, 1402))
         reg = entry_mod._l15_registry(spark, sf_dir)
-        assert reg.batch_years is True
         batched = reg.load_table("food", years, form="processed")
-        reg.batch_years = False
-        per_year = reg.load_table("food", years, form="processed")
+        per_year = _year_by_year(reg, "food", years)
         assert batched.columns == per_year.columns
         assert [f.dataType for f in batched.schema.fields] == [
             f.dataType for f in per_year.schema.fields
@@ -50,16 +57,15 @@ class TestFullSpanEquality:
         years = [1368, 1369, 1374, 1383, 1401]
         reg = entry_mod._l15_registry(spark, sf_dir)
         batched = reg.load_table("food", years, form="processed")
-        reg.batch_years = False
-        per_year = reg.load_table("food", years, form="processed")
+        per_year = _year_by_year(reg, "food", years)
         assert _collect_sorted(batched) == _collect_sorted(per_year)
 
 
-class TestBatchUnsafeFallback:
+class TestNonYearJoin:
     @pytest.fixture()
-    def registry_pair(self, spark):
-        """Two tiny registries over the same synthetic base data: one
-        batched, one per-year."""
+    def registry(self, spark):
+        """A tiny registry over synthetic base data whose joined table
+        differs per year."""
         from hbsir_old_spark.plans.registry import TableRegistry
 
         base = spark.createDataFrame(
@@ -68,51 +74,66 @@ class TestBatchUnsafeFallback:
             "ID long, K long, V double",
         )
 
-        def raw(name, year):
+        schema = {
+            "fact": {
+                "instructions": [
+                    "add_year",
+                    {"join": {"table_name": "dim", "columns": ["K"]}},
+                ]
+            },
+            # the dim differs per year, so a join NOT keyed on Year
+            # must still only match rows of the same year
+            "dim": {
+                "instructions": [
+                    {"create_column": {
+                        "name": "lbl", "type": "numerical",
+                        "versions": {1398: {"expression": "K * 2"},
+                                     1400: {"expression": "K * 3"}},
+                    }},
+                ]
+            },
+        }
+
+        def loader(name, year):
+            if name == "fact":
+                return base.filter(F.col("ID") % 3 == year % 3).drop("V")
+            if name == "dim":
+                return base.select("K").distinct()
             return None
 
-        def schema():
-            return {
-                "fact": {
-                    "instructions": [
-                        "add_year",
-                        {"join": {"table_name": "dim", "columns": ["K"]}},
-                    ]
-                },
-                # per-year semantics: the dim differs per year, so a join
-                # NOT keyed on Year would cross-contaminate in a batched
-                # frame -> must fall back
-                "dim": {
-                    "instructions": [
-                        {"create_column": {
-                            "name": "lbl", "type": "numerical",
-                            "versions": {1398: {"expression": "K * 2"},
-                                         1400: {"expression": "K * 3"}},
-                        }},
-                    ]
-                },
-            }
+        return TableRegistry(spark, schema=schema, base_loader=loader)
 
-        def mk(batch):
-            def loader(name, year):
-                if name == "fact":
-                    return base.filter(F.col("ID") % 3 == year % 3).drop("V")
-                if name == "dim":
-                    return base.select("K").distinct()
-                return None
-
-            return TableRegistry(
-                spark, schema=schema(), base_loader=loader, batch_years=batch
-            )
-
-        return mk(True), mk(False)
-
-    def test_non_year_join_falls_back_and_matches(self, registry_pair):
-        batched_reg, per_year_reg = registry_pair
+    def test_non_year_join_matches_year_by_year(self, registry):
         years = [1398, 1399, 1400]
-        a = _collect_sorted(batched_reg.load_table("fact", years))
-        b = _collect_sorted(per_year_reg.load_table("fact", years))
+        a = _collect_sorted(registry.load_table("fact", years))
+        b = _collect_sorted(_year_by_year(registry, "fact", years))
         assert a == b and len(a) > 0
+
+
+class TestExternalFunctionDroppingYear:
+    def test_runs_per_year_and_matches_year_by_year(self, spark):
+        """An external function whose output keeps neither the year tag
+        nor Year cannot tell years apart on an era frame: it must run on
+        each year's slice, so per-ID sums stay within years."""
+        from hbsir_old_spark.plans.registry import TableRegistry
+
+        base = spark.createDataFrame(
+            [(1, 5.0), (1, 7.0), (2, 1.0)], "ID long, V double"
+        )
+
+        def per_id_sum(df):
+            return df.groupBy("ID").agg(F.sum("V").alias("V"))
+
+        reg = TableRegistry(
+            spark,
+            schema={"t": {"instructions": [{"apply_external_function": "sum"}]}},
+            base_loader=lambda name, year: base if name == "t" else None,
+            external_functions={"sum": per_id_sum},
+        )
+        years = [1399, 1400]
+        a = _collect_sorted(reg.load_table("t", years))
+        assert a == _collect_sorted(_year_by_year(reg, "t", years))
+        assert sorted(a) == [(1, 12.0), (1, 12.0), (2, 1.0), (2, 1.0)]
 
 
 class TestW3CacheChain:
@@ -159,8 +180,8 @@ class TestReviewFixesRound7:
         assert out.collect()[0]["Amount"] == 6.0
 
     def test_batched_join_partial_availability_matches_per_year_error(self, spark):
-        """Review regression: per-year builds RAISE when a joined table is
-        unavailable for a requested year; the batched path must not
+        """Regression: a join RAISES when the joined table is
+        unavailable for a requested year; a multi-year build must not
         silently drop those years via a partial inner join."""
         from hbsir_old_spark.plans.registry import TableRegistry
 
@@ -181,12 +202,9 @@ class TestReviewFixesRound7:
             "dim": {"years": [{"start": 1400, "end": 1401}],
                     "instructions": ["add_year"]},
         }
-        for batch in (True, False):
-            reg = TableRegistry(
-                spark, schema=schema, base_loader=loader, batch_years=batch
-            )
-            with pytest.raises(ValueError, match="dim"):
-                reg.load_table("fact", [1399, 1400])
+        reg = TableRegistry(spark, schema=schema, base_loader=loader)
+        with pytest.raises(ValueError, match="dim"):
+            reg.load_table("fact", [1399, 1400])
 
 
 class TestOutlayChain:

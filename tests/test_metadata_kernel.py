@@ -189,7 +189,7 @@ class TestSettingsCascade:
         with _pytest.raises(KeyError):
             _ = s["years.middle"]
 
-    def test_engine_reads_settings(self, spark):
+    def test_engine_reads_settings(self, spark, monkeypatch):
         from hbsir_old_spark.api import HBSIREngine
 
         eng = HBSIREngine(
@@ -197,6 +197,30 @@ class TestSettingsCascade:
         )
         assert eng.parse_years(None)[-1] == 1390
         assert eng.registry.weight_year_threshold == 1395
+
+        # the weights switch year reaches both constructors' registries and
+        # the scratch registry of an ad-hoc schema build
+        from hbsir_old_spark.plans.registry import TableRegistry
+
+        settings = {"weights": {"household_info_from_year": 1390}}
+        seen = []
+
+        def spy(registry, df, years, adjust_for_household_size=False):
+            seen.append(registry.weight_year_threshold)
+            return df
+
+        base = spark.createDataFrame([(1, 2.0)], "ID long, V double")
+        monkeypatch.setattr(TableRegistry, "add_weights", spy)
+        for eng in (
+            HBSIREngine(spark, base_loader=lambda n, y: None, settings=settings),
+            HBSIREngine.with_reference_corpus(spark, settings=settings),
+        ):
+            assert eng.registry.weight_year_threshold == 1389
+            eng.registry.base_loader = lambda n, y: base if n == "t" else None
+            eng.create_table_with_schema(
+                {"t": {"instructions": ["add_year", "add_weights"]}}, years=[1389]
+            )
+        assert seen == [1389, 1389]
 
 
 class TestParseYears:

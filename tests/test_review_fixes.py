@@ -145,28 +145,37 @@ def test_float_constant_expression(spark):
 
 
 def test_cache_invalidated_when_base_parquet_changes(spark, tmp_path):
-    import pandas as pd
-
-    root = str(tmp_path / "base")
-    os.makedirs(root)
-    pd.DataFrame({"Year": [1400], "ID": [1], "V": [10.0]}).to_parquet(
-        f"{root}/1400_t.parquet"
-    )
-    eng = HBSIREngine(
-        spark,
-        base_loader=parquet_base_loader(spark, root),
-        schema={"derived": {"table_list": ["t"], "cache_result": True, "instructions": []}},
-        cache_dir=str(tmp_path / "cache"),
-    )
-    assert eng.load_table("derived", [1400]).collect()[0]["V"] == 10.0
-    # overwrite the base data: the fingerprint must change -> rebuild
+    """Overwriting a base parquet must invalidate every cached table built
+    on it — also when the base table has its own schema entry (every
+    corpus original table does, for its add_year step)."""
     import time as _time
 
-    _time.sleep(1.1)  # ensure mtime tick
-    pd.DataFrame({"Year": [1400], "ID": [1], "V": [99.0]}).to_parquet(
-        f"{root}/1400_t.parquet"
-    )
-    assert eng.load_table("derived", [1400]).collect()[0]["V"] == 99.0
+    import pandas as pd
+
+    for case, base_spec in (("plain", None), ("steps", {"instructions": ["add_year"]})):
+        root = str(tmp_path / case / "base")
+        os.makedirs(root)
+        pd.DataFrame({"Year": [1400], "ID": [1], "V": [10.0]}).to_parquet(
+            f"{root}/1400_t.parquet"
+        )
+        schema = {
+            "derived": {"table_list": ["t"], "cache_result": True, "instructions": []}
+        }
+        if base_spec is not None:
+            schema["t"] = base_spec
+        eng = HBSIREngine(
+            spark,
+            base_loader=parquet_base_loader(spark, root),
+            schema=schema,
+            cache_dir=str(tmp_path / case / "cache"),
+        )
+        assert eng.load_table("derived", [1400]).collect()[0]["V"] == 10.0, case
+        # overwrite the base data: the fingerprint must change -> rebuild
+        _time.sleep(1.1)  # ensure mtime tick
+        pd.DataFrame({"Year": [1400], "ID": [1], "V": [99.0]}).to_parquet(
+            f"{root}/1400_t.parquet"
+        )
+        assert eng.load_table("derived", [1400]).collect()[0]["V"] == 99.0, case
 
 
 def test_weights_join_has_no_forced_broadcast(engine):
