@@ -350,21 +350,23 @@ class HBSIREngine:
 
 def parquet_base_loader(spark: SparkSession, root: str) -> BaseLoader:
     """Base loader over the working layout ``{root}/{year}_{table}.parquet``
-    (reference data_engine.py:231-234)."""
+    (reference data_engine.py:231-234). Each file is opened once per
+    version: every call re-stats it and returns the frame read last time
+    while its :func:`~hbsir_old_spark.sources.frames.path_identity` is
+    unchanged, re-reads it after an overwrite and returns None once it is
+    gone. ``stats_fn`` reports the same identity to ``cache_result``
+    fingerprints."""
     import os
 
+    from hbsir_old_spark.sources.frames import parquet_reader, path_identity
+
+    read = parquet_reader()
+
     def load(name: str, year: int):
-        path = os.path.join(root, f"{year}_{name}.parquet")
-        if not os.path.exists(path):
-            return None
-        return spark.read.parquet(path)
+        return read(spark, os.path.join(root, f"{year}_{name}.parquet"))
 
     def stats(name: str, year: int):
-        path = os.path.join(root, f"{year}_{name}.parquet")
-        if not os.path.exists(path):
-            return None
-        st = os.stat(path)
-        return [st.st_size, int(st.st_mtime)]
+        return path_identity(os.path.join(root, f"{year}_{name}.parquet"))
 
     load.stats_fn = stats  # picked up by dependency_fingerprint
     return load
@@ -375,17 +377,30 @@ def partitioned_base_loader(spark: SparkSession, root: str) -> BaseLoader:
     (written by ``sources.writer.write_partitioned``). Each per-year request
     is a Year-filter over the partitioned table, so the scan prunes to one
     directory — the registry's per-year planning and parquet partition
-    pruning line up exactly."""
+    pruning line up exactly. The table-level frame is opened once per
+    version of the table directory (statted on every call, re-read when
+    any partition file changes); ``stats_fn`` is the identity of the
+    ``Year=YYYY`` directory, so rewriting a partition invalidates the
+    ``cache_result`` tables built on that year."""
     import os
 
     from pyspark.sql import functions as F
+
+    from hbsir_old_spark.sources.frames import parquet_reader, path_identity
+
+    read = parquet_reader()
 
     def load(name: str, year: int):
         path = os.path.join(root, name)
         if not os.path.isdir(os.path.join(path, f"Year={year}")):
             return None
-        return spark.read.parquet(path).filter(F.col("Year") == year)
+        df = read(spark, path)
+        return None if df is None else df.filter(F.col("Year") == year)
 
+    def stats(name: str, year: int):
+        return path_identity(os.path.join(root, name, f"Year={year}"))
+
+    load.stats_fn = stats  # picked up by dependency_fingerprint
     return load
 
 

@@ -4,10 +4,10 @@ Reference parity: the reference caches ``cache_result: true`` tables as
 parquet plus a YAML snapshot of the resolved dependency tree, rebuilding
 when the tree changes (/root/reference/hbsir/core/data_engine.py:515-610).
 Same algorithm here, driver-side: fingerprint = sha256 over (resolved
-schema subtree, base-file size/mtime stats); storage = parquet + JSON
-sidecar. On a cluster the cache directory lives on shared storage and the
-materialized parquet doubles as a shuffle-free, partition-pruned input for
-downstream plans.
+schema subtree, base-file identities from ``frames.path_identity``);
+storage = parquet + JSON sidecar. On a cluster the cache directory lives on
+shared storage and the materialized parquet doubles as a shuffle-free,
+partition-pruned input for downstream plans.
 """
 
 from __future__ import annotations
@@ -65,9 +65,19 @@ def active_context_token() -> int | None:
 
 
 class FingerprintCache:
+    """``cache_result`` tables as ``{root}/{year}_{table}.parquet`` plus a
+    JSON sidecar holding the fingerprint they were built under. Reads go
+    through one :func:`~hbsir_old_spark.sources.frames.parquet_reader`, so
+    a cache entry is opened once per version: ``get`` re-stats the entry on
+    every call and reuses the frame it read while the files are unchanged,
+    and ``put`` re-reads the entry it overwrote."""
+
     def __init__(self, root: str):
+        from hbsir_old_spark.sources.frames import parquet_reader
+
         self.root = root
         os.makedirs(root, exist_ok=True)
+        self._read = parquet_reader()
 
     def _paths(self, table: str, year: int) -> tuple[str, str]:
         base = os.path.join(self.root, f"{year}_{table}")
@@ -75,8 +85,6 @@ class FingerprintCache:
 
     def get(self, spark: SparkSession, table: str, year: int, fingerprint: str) -> DataFrame | None:
         data_path, meta_path = self._paths(table, year)
-        if not (os.path.exists(data_path) and os.path.exists(meta_path)):
-            return None
         try:
             with open(meta_path) as fh:
                 meta = json.load(fh)
@@ -84,11 +92,11 @@ class FingerprintCache:
             return None
         if meta.get("fingerprint") != fingerprint:
             return None
-        return spark.read.parquet(data_path)
+        return self._read(spark, data_path)
 
     def put(self, df: DataFrame, table: str, year: int, fingerprint: str) -> DataFrame:
         data_path, meta_path = self._paths(table, year)
         df.write.mode("overwrite").parquet(data_path)
         with open(meta_path, "w") as fh:
             json.dump({"table": table, "year": year, "fingerprint": fingerprint}, fh)
-        return df.sparkSession.read.parquet(data_path)
+        return self._read(df.sparkSession, data_path)

@@ -178,6 +178,31 @@ def test_cache_invalidated_when_base_parquet_changes(spark, tmp_path):
         assert eng.load_table("derived", [1400]).collect()[0]["V"] == 99.0, case
 
 
+def test_cache_invalidated_by_same_size_overwrite_within_one_second(spark, tmp_path):
+    """A same-size overwrite whose mtime falls in the same second must still
+    change the fingerprint: base-file identities use nanosecond mtimes."""
+    import pandas as pd
+
+    root = str(tmp_path / "base")
+    os.makedirs(root)
+    path = f"{root}/1400_t.parquet"
+    second_ns = 1_700_000_000 * 10**9
+    pd.DataFrame({"Year": [1400], "ID": [1], "V": [10.0]}).to_parquet(path)
+    size = os.path.getsize(path)
+    os.utime(path, ns=(second_ns + 100, second_ns + 100))
+    eng = HBSIREngine(
+        spark,
+        base_loader=parquet_base_loader(spark, root),
+        schema={"derived": {"table_list": ["t"], "cache_result": True, "instructions": []}},
+        cache_dir=str(tmp_path / "cache"),
+    )
+    assert eng.load_table("derived", [1400]).collect()[0]["V"] == 10.0
+    pd.DataFrame({"Year": [1400], "ID": [1], "V": [99.0]}).to_parquet(path)
+    assert os.path.getsize(path) == size  # same size: only the mtime differs
+    os.utime(path, ns=(second_ns + 500_000_000, second_ns + 500_000_000))
+    assert eng.load_table("derived", [1400]).collect()[0]["V"] == 99.0
+
+
 def test_weights_join_has_no_forced_broadcast(engine):
     te = engine.load_table("Total_Expenditure", [1400])
     plan = engine.add_weight(te)._jdf.queryExecution().logical().toString()
